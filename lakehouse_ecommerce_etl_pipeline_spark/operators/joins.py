@@ -230,10 +230,6 @@ def fk_violations(
     """Rows violating ANY of the FK constraints, tagged with the first
     violated constraint in ``fk_violation`` (feeds the quarantine sink;
     fixes SURVEY.md §2.13's dropped-invalid-rows gap)."""
-    out = df
-    for child_col, (parent, parent_key) in fks.items():
-        out = semi_join(out, parent.select(F.col(parent_key).alias(child_col)),
-                        child_col, broadcast_dim)
     # violations = original minus fully-valid, tagged per constraint
     parts = []
     remaining = df

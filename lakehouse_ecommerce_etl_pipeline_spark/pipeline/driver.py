@@ -7,7 +7,9 @@ reference mapping (SURVEY.md §2.12):
   parent tables are missing (order_items_etl.py:47-50,57-60)
 - O3 retry w/ backoff    → ``_with_retries`` (2 attempts, 10 s, ×2 —
   lakehouse_etl_stepfunction.json:45-54)
-- O5 post-load COUNT(*)  → catalog.count_star validation
+- O5 post-load COUNT(*)  → the row count of the published snapshot,
+  observed on the MERGE write itself (catalog.count_star only under
+  Delta, whose MERGE cannot be observed)
 - O7 archive + mark      → file move into archived/ + marker row
   (archive_and_mark_processed.py:28-47)
 
@@ -80,7 +82,11 @@ def run_dataset(
     source_path: str,
 ) -> dict[str, int]:
     """One ETL job — the §3.2 shape: read → validate → [FK] → dedup →
-    audit → MERGE → DDL. Returns counters for observability."""
+    audit → MERGE → DDL. Returns counters for observability.
+
+    The source is parsed once: the labelled frame every action reads
+    (rejected count, quarantine write, MERGE) is persisted on the first
+    action and released before returning or raising."""
     job: DatasetJob = JOBS[dataset]
 
     parents: dict[str, DataFrame] = {}
@@ -94,18 +100,25 @@ def run_dataset(
         parents[parent] = managed.read(spark, ppath)
 
     raw = read_source(spark, job, source_path)
-    clean, rejected = transform(raw, job, parents)
+    labelled, clean, rejected = transform(raw, job, parents)
 
     tpath = table_path(base_dir, dataset)
-    n_rejected = write_rejected(spark, rejected, tpath)
-    merge_upsert(spark, tpath, clean, [job.merge_key], partition_by=job.partition_by)
+    labelled.persist()
+    try:
+        n_rejected = write_rejected(spark, rejected, tpath)
+        n_loaded = merge_upsert(
+            spark, tpath, clean, [job.merge_key], partition_by=job.partition_by
+        )
+    finally:
+        labelled.unpersist()
 
     # K4 — the reference's DDL shape: CREATE TABLE ... USING <fmt>
     # LOCATION pointing at the current snapshot (orders_etl.py:98-103)
     qualified = catalog.register_table_external(
         spark, managed.current_data_path(tpath), dataset
     )
-    n_loaded = catalog.count_star(spark, qualified)  # O5 validation query
+    if n_loaded is None:  # Delta MERGE: O5 validation query
+        n_loaded = catalog.count_star(spark, qualified)
     return {"loaded": n_loaded, "rejected": n_rejected}
 
 

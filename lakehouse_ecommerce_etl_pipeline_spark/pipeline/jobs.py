@@ -21,13 +21,10 @@ from lakehouse_ecommerce_etl_pipeline_spark.functions.datetime import (
     with_audit_columns,
 )
 from lakehouse_ecommerce_etl_pipeline_spark.operators.dedup import dedup_arbitrary
-from lakehouse_ecommerce_etl_pipeline_spark.operators.joins import (
-    fk_violations,
-    referential_filter,
-)
 from lakehouse_ecommerce_etl_pipeline_spark.operators.validate import (
-    split_valid_invalid,
+    not_null_predicate,
 )
+from lakehouse_ecommerce_etl_pipeline_spark.sinks.quarantine import DEFAULT_REASON
 from lakehouse_ecommerce_etl_pipeline_spark.sources.excel import read_workbooks
 from lakehouse_ecommerce_etl_pipeline_spark.sources.files import read_csv
 
@@ -135,32 +132,49 @@ def read_source(spark: SparkSession, job: DatasetJob, path: str) -> DataFrame:
     )
 
 
+def label(
+    df: DataFrame,
+    job: DatasetJob,
+    parents: dict[str, DataFrame],
+) -> DataFrame:
+    """Every row of ``df`` plus ``rejection_reason``: null for a clean
+    row, else the first failed check — a null required field, then the
+    first dangling FK in ``job.fks`` order. Same tags as
+    ``split_valid_invalid`` → ``fk_violations`` / ``referential_filter``
+    (operators/), computed in one pass.
+
+    Each FK check is an IN-subquery on the parent's key set, which plans
+    as one existence join per parent (broadcast when the parent is
+    small, no distinct); a null or unmatched key is a violation, the
+    semi-join semantics of ``referential_filter``."""
+    reason = F.when(~not_null_predicate(job.required), F.lit(DEFAULT_REASON))
+    for child, parent in job.fks.items():
+        parent_keys = parents[parent].select(PARENT_KEYS[parent])
+        found = F.coalesce(F.col(child).isin(parent_keys), F.lit(False))
+        reason = reason.when(~found, F.lit(f"FK violation: {child}"))
+    return df.withColumn("rejection_reason", reason)
+
+
 def transform(
     df: DataFrame,
     job: DatasetJob,
     parents: dict[str, DataFrame],
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, rejected) — the per-dataset transformation core.
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(labelled, clean, rejected) — the per-dataset transformation core.
 
-    clean = validate → [FK filter] → dedup → audit/typed columns;
-    rejected = null-violations ∪ FK-violations tagged with reasons
-    (fixing the reference's silently-dropped invalid rows, §2.13).
+    ``labelled`` tags every input row once (``label``); clean and
+    rejected are two filters on it, so persisting ``labelled`` makes
+    every later action read the source once (pipeline/driver.py).
+    clean = untagged rows → dedup → audit/typed columns; rejected =
+    tagged rows (fixing the reference's silently-dropped invalid rows,
+    §2.13). Plan construction only: launches no Spark job.
     """
-    valid, invalid = split_valid_invalid(df, job.required)
-    rejected = invalid.withColumn("rejection_reason", F.lit("Missing required fields"))
-
-    if job.fks:
-        fk_map = {
-            child: (parents[parent], PARENT_KEYS[parent])
-            for child, parent in job.fks.items()
-        }
-        bad_fk = fk_violations(valid, fk_map).withColumn(
-            "rejection_reason", F.concat(F.lit("FK violation: "), F.col("fk_violation"))
-        ).drop("fk_violation")
-        rejected = rejected.unionByName(bad_fk, allowMissingColumns=True)
-        valid = referential_filter(valid, fk_map)
-
-    clean = dedup_arbitrary(valid, [job.merge_key])  # orders_etl.py:74
+    labelled = label(df, job, parents)
+    reason = F.col("rejection_reason")
+    rejected = labelled.filter(reason.isNotNull())
+    clean = dedup_arbitrary(  # orders_etl.py:74
+        labelled.filter(reason.isNull()).drop("rejection_reason"), [job.merge_key]
+    )
 
     if job.ts_col:
         clean = with_audit_columns(clean, job.ts_col)  # orders_etl.py:75-80
@@ -174,4 +188,4 @@ def transform(
         )
     if job.name == "order_items":
         clean = clean.withColumn("reordered", F.col("reordered").cast("boolean"))
-    return clean, rejected
+    return labelled, clean, rejected

@@ -41,6 +41,18 @@ def delta_available() -> bool:
     return importlib.util.find_spec("delta") is not None
 
 
+# the directory holding this package: Python workers import the engine
+# from it whatever the driver's working directory
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _executor_pythonpath(existing: str | None) -> str:
+    """``existing`` with the package's parent directory in front (once)."""
+    rest = [p for p in (existing or "").split(os.pathsep) if p and p != _PACKAGE_PARENT]
+    return os.pathsep.join([_PACKAGE_PARENT, *rest])
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -119,7 +131,11 @@ def get_spark(
             )
         )
 
-    for k, v in (extra_conf or {}).items():
+    # the workers' PYTHONPATH also gets the driver's $PYTHONPATH from
+    # Spark itself; a caller's own entries (extra_conf) are kept
+    conf = dict(extra_conf or {})
+    conf[_EXECUTOR_PYTHONPATH] = _executor_pythonpath(conf.get(_EXECUTOR_PYTHONPATH))
+    for k, v in conf.items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_ecommerce_etl_pipeline_spark.session import delta_available
@@ -60,6 +60,20 @@ def merge_frames(
     return kept.select(*cols).unionByName(source.select(*cols))
 
 
+def _write_counted(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_by: Sequence[str] | None,
+) -> int:
+    """Publish ``df`` as the table's next snapshot; returns its row
+    count, observed on the write itself (no extra pass)."""
+    obs = Observation()
+    counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    managed.write(spark, counted, path, partition_by=list(partition_by or []))
+    return obs.get["rows"]
+
+
 def merge_upsert(
     spark: SparkSession,
     path: str,
@@ -67,13 +81,15 @@ def merge_upsert(
     keys: Sequence[str],
     partition_by: Sequence[str] | None = None,
     evolve_schema: bool = False,
-) -> None:
+) -> int | None:
     """Upsert ``source`` into the managed table at ``path``; initial
     write if the table doesn't exist yet (reference: merge-or-initial
-    branch, orders_etl.py:82-96)."""
+    branch, orders_etl.py:82-96).
+
+    Returns the row count of the snapshot it publishes, observed on the
+    write; ``None`` on the Delta path, whose MERGE cannot be observed."""
     if not managed.exists(path):
-        managed.write(spark, source, path, partition_by=list(partition_by or []))
-        return
+        return _write_counted(spark, source, path, partition_by)
     if delta_available():
         from delta.tables import DeltaTable  # type: ignore
 
@@ -88,10 +104,10 @@ def merge_upsert(
             .whenNotMatchedInsertAll()
             .execute()
         )
-        return
+        return None
     target = managed.read(spark, path)
     merged = merge_frames(target, source, keys, evolve_schema=evolve_schema)
-    managed.write(spark, merged, path, partition_by=list(partition_by or []))
+    return _write_counted(spark, merged, path, partition_by)
 
 
 def apply_changes_frames(

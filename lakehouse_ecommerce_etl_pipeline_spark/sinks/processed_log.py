@@ -20,6 +20,7 @@ import datetime as _dt
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lakehouse_ecommerce_etl_pipeline_spark.sources import table as managed
@@ -55,9 +56,16 @@ def is_processed(spark: SparkSession, base_path: str, dataset: str, file_name: s
 def mark_processed(
     spark: SparkSession, base_path: str, dataset: str, file_name: str
 ) -> None:
-    """reference: archive_and_mark_processed.py:37-44 (marker put)."""
-    row = [(dataset, file_name, _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None))]
-    new = spark.createDataFrame(row, SCHEMA)
+    """reference: archive_and_mark_processed.py:37-44 (marker put).
+
+    The one-row frame is built in the JVM (``spark.range``) rather than
+    from a Python list, which would map through a Python worker."""
+    now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    new = spark.range(1).select(
+        F.lit(dataset).alias("dataset"),
+        F.lit(file_name).alias("file_name"),
+        F.lit(now).alias("processed_at"),
+    ).to(SCHEMA)
     p = log_path(base_path)
     if managed.exists(p):
         new = managed.read(spark, p).unionByName(new)

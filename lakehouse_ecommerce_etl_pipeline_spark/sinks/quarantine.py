@@ -41,9 +41,11 @@ def write_rejected(
 ) -> int:
     """Append rejects to the quarantine table; returns rejected count.
 
-    The count-gate mirrors product_etl.py:64 (write only when
-    non-empty) but via a cheap existence probe pattern at scale the
-    write itself is the action; we count once and reuse.
+    The count gates the write, as product_etl.py:64 does (write only
+    when non-empty), and is the returned counter. It is one extra
+    action over ``invalid``: callers persist the frame ``invalid`` is
+    filtered from (pipeline/driver.py), so the count reads memory
+    instead of re-parsing the source.
     """
     tagged = with_reason(invalid, reason)
     n = tagged.count()

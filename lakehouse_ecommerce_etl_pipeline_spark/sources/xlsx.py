@@ -232,7 +232,7 @@ def _cell_xml(ref: str, v) -> str:
 
     if isinstance(v, np.generic):  # np.int64 is not a python int
         v = v.item()
-    if v is None or (isinstance(v, float) and v != v):
+    if pd.isna(v):  # None, NaN, NaT, pd.NA: an empty cell
         return ""
     if isinstance(v, bool):
         return f'<c r="{ref}" t="b"><v>{int(v)}</v></c>'

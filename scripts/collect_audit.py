@@ -69,11 +69,11 @@ EXPECTED = {
     "plans/llm38.py": (7, "sink-stats", "protobuf export/ingest: per-file write actions (file-count rows)"),
     "plans/llm6.py": (2, "sample", "1-row query-vector collects"),
     "plans/llm7.py": (1, "scalar", "candidate count sizing the negative-sampling threshold"),
-    "sinks/catalog.py": (1, "scalar", "COUNT(*) validation scalar (reference parity O4)"),
+    "sinks/catalog.py": (1, "scalar", "COUNT(*) validation scalar (reference parity O4) — the pipeline runs it only under Delta, whose MERGE cannot be observed"),
     "sources/table.py": (1, "scalar", ".rdd.getNumPartitions() sizing the zorder compaction's range partitioner — a maintenance op on a RAW parquet read (no upstream shuffles to double-execute)"),
     "sinks/merge.py": (2, "scalar", "duplicate-key guard: limit(1).count() existence probe"),
     "sinks/processed_log.py": (1, "scalar", "marker-row existence count"),
-    "sinks/quarantine.py": (1, "scalar", "rejected-row count returned to the caller (reference parity K3)"),
+    "sinks/quarantine.py": (1, "scalar", "rejected-row count returned to the caller (reference parity K3); the pipeline runs it over its persisted labelled frame"),
     "streaming/incremental_dedup.py": (1, "scalar", "per-batch survivor existence probe inside foreachBatch"),
 }
 

@@ -179,3 +179,22 @@ def test_python_date_objects_become_midnight(tmp_path):
     pdf = pd.DataFrame({"d": [dt.date(1997, 7, 1)]})
     got = _roundtrip({"s": pdf})["s"]["d"][0]
     assert got == pd.Timestamp("1997-07-01 00:00:00")
+
+
+def test_missing_values_roundtrip_as_empty_cells():
+    # NaT, NaN, None and pd.NA are written as empty cells, not "nan"
+    ts = pd.Timestamp("2025-04-01 09:30:00")
+    pdf = pd.DataFrame(
+        {
+            "t": [ts, pd.NaT, ts],
+            "f": [1.5, float("nan"), 2.5],
+            "s": ["a", None, "c"],
+            "n": pd.array([1, pd.NA, 3], dtype="Int64"),
+        }
+    )
+    got = _roundtrip({"s": pdf})["s"]
+    assert got["t"][0] == ts and got["t"][2] == ts
+    assert got["f"][0] == 1.5 and got["f"][2] == 2.5
+    assert got["s"][0] == "a" and got["s"][2] == "c"
+    assert got["n"][0] == 1 and got["n"][2] == 3
+    assert all(pd.isna(got[c][1]) for c in pdf.columns)
